@@ -185,25 +185,22 @@ object SparkEntry {
     * SERIALLY on one core while the rest of the session idled (opt
     * guide §2.5/§2.6). The exchange moves only the filtered ids — a
     * few hundred longs, effectively free — unlike spreading the full
-    * text table, which tools/SpreadAb measured a net loss for cheap
-    * map work (see Tables.spreadScan). Row-identical: the kernels are
-    * pure per-row functions of the id, and every gate orders its
-    * output. Honors the same `spark.graft.scan.spread` kill switch as
-    * Tables.spreadScan so one conf disables every spread behavior
-    * (the documented production escape hatch / SpreadAb toggle). */
+    * text table, which a same-session A/B measured a net loss for
+    * cheap map work (OPTIMIZATION_r15.md §7; see Tables.spreadScan).
+    * Row-identical: the kernels are pure per-row functions of the id,
+    * and every gate orders its output. */
   private def kernelIds(s: SparkSession, dir: String, below: Long)
       : org.apache.spark.sql.Dataset[Long] = {
     import s.implicits._
-    val ids = Tables.documents(s, dir).filter(col("doc_id") < below)
+    Tables.documents(s, dir).filter(col("doc_id") < below)
       .select(col("doc_id")).as[Long]
-    if (!s.conf.getOption(Tables.ScanSpreadKey).forall(_.toBoolean)) ids
-    else ids.repartition(s.sparkContext.defaultParallelism)
+      .repartition(s.sparkContext.defaultParallelism)
   }
 
   /** Documents with the single-split scan spread across cores — ONLY
     * for gates whose per-row text kernels (shingle/token hashing over
-    * the full text) dominate the query; each use A/B-verified with
-    * tools/SpreadAb (blanket spreading measured a net loss — see
+    * the full text) dominate the query; each use A/B-verified in
+    * OPTIMIZATION_r15.md (blanket spreading measured a net loss — see
     * Tables.spreadScan). */
   private def docsSpread(s: SparkSession, dir: String): DataFrame =
     Tables.spreadTable(s, dir, "documents", Tables.documents(s, dir))
@@ -213,12 +210,17 @@ object SparkEntry {
     * verdict `x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty`
     * computed with two shuffles and four actions (the r15
     * streaming-IVF equality rewrite, shared with the batch gates
-    * since r16). */
-  private def multisetEq(x: DataFrame, y: DataFrame): Boolean = {
+    * since r16). The sign and sum helper columns take names absent
+    * from `x`, so an input column cannot be overwritten or shadowed. */
+  private[graft] def multisetEq(x: DataFrame, y: DataFrame): Boolean = {
     val keys = x.columns.map(col)
-    x.withColumn("_s", lit(1L)).unionByName(y.withColumn("_s", lit(-1L)))
-      .groupBy(keys: _*).agg(sum(col("_s")).as("_d"))
-      .filter(col("_d") =!= 0L)
+    def fresh(base: String): String =
+      Iterator.from(0).map(i => s"$base$i")
+        .find(c => !x.columns.exists(_.equalsIgnoreCase(c))).get
+    val (sgn, dif) = (fresh("_s"), fresh("_d"))
+    x.withColumn(sgn, lit(1L)).unionByName(y.withColumn(sgn, lit(-1L)))
+      .groupBy(keys: _*).agg(sum(col(sgn)).as(dif))
+      .filter(col(dif) =!= 0L)
       .isEmpty
   }
 

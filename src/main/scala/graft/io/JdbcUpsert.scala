@@ -107,13 +107,20 @@ object JdbcUpsert {
     val staging = path + "_staging"
     merged.write.mode("overwrite").parquet(staging)
     val target = new java.io.File(path)
+    val staged = new java.io.File(staging)
+    def fail(what: String) =
+      throw new java.io.IOException(s"mergeIntoParquet: $what; merged batch left at $staging")
     if (exists) {
+      // a leftover non-empty <path>_old (an earlier merge that died
+      // between the renames may hold the only copy) makes this rename
+      // fail: stop with the table untouched rather than drop the batch
       val old = new java.io.File(path + "_old")
-      target.renameTo(old)
-      new java.io.File(staging).renameTo(target)
+      if (!target.renameTo(old)) fail(s"cannot move $path aside to $old")
+      if (!staged.renameTo(target)) {
+        old.renameTo(target)
+        fail(s"cannot move $staging into place at $path")
+      }
       deleteRecursively(old)
-    } else {
-      new java.io.File(staging).renameTo(target)
-    }
+    } else if (!staged.renameTo(target)) fail(s"cannot move $staging into place at $path")
   }
 }

@@ -148,18 +148,6 @@ object Dedup {
     * (Spark 4 default) sees no overflowing SQL arithmetic. */
   def permutedHash(i: Int, h: Column): Column = xxhash64(lit(i), h)
 
-  /** MinHash signature as a single expression (array<bigint> of length
-    * `numHashes`). Fine for ad-hoc use; the pipeline form in
-    * [[minHashNearDups]] uses explode + codegen'd min() aggregates
-    * instead, because array-aggregate lambdas are CodegenFallback. */
-  def minHashSignature(shingles: Column, numHashes: Int): Column = {
-    val base = transform(shingles, s => xxhash64(s))
-    val sigs = (0 until numHashes).map { i =>
-      aggregate(base, lit(Long.MaxValue), (acc, h) => least(acc, permutedHash(i, h)))
-    }
-    array(sigs: _*)
-  }
-
   /** LSH banding: split a signature of length b*r into b bands of r rows;
     * each band becomes (band_id, band_hash). Docs sharing any band bucket
     * are candidate pairs. Probability a pair with Jaccard j collides:
@@ -174,15 +162,6 @@ object Dedup {
     * are capped (`maxBucket`) to bound skew blowup (a degenerate bucket —
     * e.g. empty docs — would otherwise produce |bucket|² pairs); shuffle 2
     * dedups pairs; the verify join re-reads shingles by id. */
-  /** Candidate-density threshold (banding pairs per doc) above which
-    * AUTO mode turns the signature-estimate prefilter on. Sparse
-    * corpora (the common case: few true near-dups, banding candidates
-    * ≈ true pairs) keep the exact-verify-every-candidate path; dense
-    * regimes (boilerplate-heavy crawls — the ×50 probe's 9 GB
-    * verify-shuffle lesson in BENCH_NOTES) gate the array-carrying
-    * verify join behind the n-longs-per-doc signature estimate. */
-  val DensePairsPerDoc = 8.0
-
   def minHashNearDups(
       df: DataFrame,
       id: String,
@@ -193,6 +172,7 @@ object Dedup {
       minJaccard: Double = 0.5,
       maxBucket: Int = 64,
       estPrefilter: Double = 0.0): DataFrame = {
+    require(estPrefilter >= 0.0, s"estPrefilter must be >= 0, got $estPrefilter")
     // Shingle HASH sets (array<bigint>) via the codegen'd kernel — the
     // shingle string never materializes (graft.expr.WordShingleHashes;
     // ~30× over the interpreted HOF form). Persisted because they feed
@@ -234,52 +214,20 @@ object Dedup {
     // the array-carrying verify join. estPrefilter = 0.0 (the DEFAULT)
     // disables the prune: every banding candidate gets the exact
     // verify, so output is a deterministic function of the corpus —
-    // never of its density. estPrefilter > 0 pins the cutoff; < 0
-    // opts into AUTO: one cheap action over the BOUNDED bucket table
-    // (≤ maxBucket ids per row) plus a count of the already-persisted
-    // shingle table measures candidate density, and only a dense
-    // regime (> DensePairsPerDoc) turns the prune on, at minJaccard −
-    // 3σ, σ = sqrt(J(1−J)/n) — a true pair at the threshold clears
-    // that margin with ≥ 99.8% probability per signature, and pairs
-    // above it essentially always, so sparse corpora keep
-    // BIT-IDENTICAL output while boilerplate-heavy crawls bound the
-    // verify shuffle ~2.2× (the ×50 probe's 9 GB lesson, BENCH_NOTES).
-    // AUTO is opt-in rather than default because the prune makes
-    // recall at the exact threshold probabilistic (~0.1% of true
-    // pairs sitting exactly AT minJaccard can drop in dense regimes);
-    // when it engages, the cutoff is logged so runs stay observable.
-    // (The eager stats actions mirror the k-means seeding pattern.)
-    val cutoff: Double =
-      if (estPrefilter >= 0.0) estPrefilter
-      else {
-        val bk = buckets.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val cand = (bk.agg(sum(size(col("_ids")).cast("long") *
-            (size(col("_ids")) - 1)).as("c"))
-          .first() match {
-            case r if r.isNullAt(0) => 0L
-            case r => r.getLong(0)
-          }) / 2
-        val docs = math.max(1L, shingled.count())
-        if (cand.toDouble / docs <= DensePairsPerDoc) 0.0
-        else {
-          val sigma = math.sqrt(minJaccard * (1 - minJaccard) / n)
-          val c = math.max(0.0, minJaccard - 3 * sigma)
-          org.slf4j.LoggerFactory.getLogger("graft.ops.Dedup").info(
-            s"minHashNearDups AUTO prefilter engaged: $cand candidates / " +
-              s"$docs docs (> $DensePairsPerDoc per doc); signature-estimate " +
-              s"cutoff = $c (minJaccard $minJaccard - 3 sigma)")
-          c
-        }
-      }
-    val pairs = if (cutoff <= 0.0) rawPairs else {
+    // never of its density. estPrefilter > 0 pins the cutoff: for
+    // dense regimes (boilerplate-heavy crawls — the ×50 probe's 9 GB
+    // verify-shuffle lesson in BENCH_NOTES), minJaccard − 3σ with
+    // σ = sqrt(J(1−J)/n) bounds the verify shuffle ~2.2×, and a true
+    // pair at the threshold clears it with ≥ 99.8% probability per
+    // signature.
+    val pairs = if (estPrefilter == 0.0) rawPairs else {
       val sa = sig.select(col("_id").as("id_a"), col("_sig").as("_siga"))
       val sb = sig.select(col("_id").as("id_b"), col("_sig").as("_sigb"))
       rawPairs.join(sa, "id_a").join(sb, "id_b")
         .withColumn("_est",
           size(filter(zip_with(col("_siga"), col("_sigb"), (x, y) => x === y),
             m => m)).cast("double") / n)
-        .filter(col("_est") >= cutoff)
+        .filter(col("_est") >= estPrefilter)
         .select(col("id_a"), col("id_b"))
     }
     // verify with exact Jaccard on the shingle-hash sets (collision odds
@@ -583,11 +531,6 @@ object Dedup {
       case _ => ()
     }
 
-  /** Rounds the most recent [[clusterPairs]] call took to converge —
-    * a probe/test hook for the O(log diameter) scale claim, not part
-    * of the data path (last invocation wins under concurrency). */
-  @volatile private[graft] var lastClusterRounds: Int = -1
-
   def clusterPairs(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val spark = pairs.sparkSession
@@ -668,10 +611,6 @@ object Dedup {
       prevSum = newSum
       round += 1
     }
-    // probe/test observability: rounds-to-convergence is the O(log
-    // diameter) claim scale probes verify (GraphScaleProbe reads this;
-    // single-threaded probes only — last invocation wins)
-    lastClusterRounds = round
     edges.unpersist()
     labels
   }

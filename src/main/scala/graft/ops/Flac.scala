@@ -133,7 +133,6 @@ object Flac {
     }
     def alignToByte(): Unit = { pos = (pos + 7) & ~7L }
     def bytePos: Int = (pos >>> 3).toInt
-    def bitInByte: Int = (pos & 7).toInt
   }
 
   // ------------------------------------------------------------------

@@ -75,7 +75,9 @@ object Graph {
     // one scan per round for a frame that never changes (opt guide
     // §1.2). |V| rows, bounded; released after the last round (safe:
     // each round's result is eagerly pinned, nothing lazy reads n).
-    val n = nodes.select(col(nodeCol).cast("long").as("node")).persist()
+    // With no rounds the returned init frame reads n lazily, so n is
+    // left unpersisted rather than pinned with nobody to release it.
+    val n = persistIf(iters > 0, nodes.select(col(nodeCol).cast("long").as("node")))
 
     // Degree-join once; persist so every round reuses the hash(src)
     // partitioning instead of re-shuffling the edge table.
@@ -90,6 +92,9 @@ object Graph {
     if (iters > 0) n.unpersist()
     ranks.select(col("node"), col("r").as("rank_micro"))
   }
+
+  private def persistIf(cond: Boolean, df: DataFrame): DataFrame =
+    if (cond) df.persist() else df
 
   /** Exact per-node triangle counts via degree orientation — the
     * "forward" algorithm (Schank & Wagner 2005; the shape Cohen's
@@ -318,7 +323,7 @@ object Graph {
     require(iters >= 0 && iters <= 1000, s"iters must be in [0,1000], got $iters")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     // node universe persisted across rounds — see [[pagerank]]
-    val n = nodes.select(col(nodeCol).as("node")).persist()
+    val n = persistIf(iters > 0, nodes.select(col(nodeCol).as("node")))
     val ed = e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
       .persist()
     var ranks = n.select(col("node"), lit(1000000L).as("r"))

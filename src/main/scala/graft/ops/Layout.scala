@@ -118,17 +118,6 @@ object Layout {
     cur.drop("_hx", "_hy")
   }
 
-  /** Hilbert-curve layout: range-exchange + within-partition sort on
-    * the Hilbert index — same job shape as [[zOrder2]] (sampled split
-    * points, no global sort barrier), tighter average bounding boxes. */
-  def hilbertOrder2(df: DataFrame, x: Column, y: Column, numPartitions: Int,
-      bits: Int = 16): DataFrame = {
-    hilbertIndexed2(df, x, y, "_h", bits)
-      .repartitionByRange(numPartitions, col("_h"))
-      .sortWithinPartitions("_h")
-      .drop("_h")
-  }
-
   /** Zone-map (min/max footer) statistics per file: the ANALYZE-style
     * summary every data-skipping reader consumes — parquet row-group
     * stats, Iceberg/Delta manifest column bounds, ORC stripe footers

@@ -35,7 +35,7 @@ object Mixing {
     // eager checkpoint: phases 2 and 3 must see the SAME sampled range
     // boundaries (see Packing.assignShards for the full rationale;
     // local vs reliable per Packing.ReliableCheckpointKey, width per
-    // Packing.AdaptiveWidthKey — AQE-coalesced unless the caller pins)
+    // Packing.rangedBy — AQE-coalesced unless the caller pins)
     val ranged = Packing.rangedBy(df, order, numPartitions)
     val counts = ranged
       .select(spark_partition_id().as("_pid"), col(group))

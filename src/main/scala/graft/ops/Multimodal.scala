@@ -2148,14 +2148,6 @@ object Multimodal {
     out.toByteArray
   }
 
-  /** Batched decompression of a gzip payload column — the ingest-side
-    * boundary for compressed text shards. */
-  def gunzipPayloads(records: Dataset[MediaRecord]): Dataset[MediaRecord] = {
-    import records.sparkSession.implicits._
-    records.mapPartitions(it =>
-      it.map(r => MediaRecord(r.doc_id, gunzip(r.payload), r.fmt, r.lang)))
-  }
-
   // -------------------------------------------------------------------
   // ZIP (PKWARE APPNOTE) — the ARCHIVE wrapper multimodal corpora
   // arrive in (image/audio dumps ship as .zip far more often than as

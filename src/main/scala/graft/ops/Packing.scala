@@ -46,9 +46,9 @@ object Packing {
     * range partitioning, which is the correctness requirement. */
   val ReliableCheckpointKey = "spark.graft.prefixSum.reliableCheckpoint"
 
-  /** Conf key (default TRUE) for the prefix-sum family's exchange
-    * width: when the caller does not pin `numPartitions`, the range
-    * exchange is planned WITHOUT an explicit partition count so AQE's
+  /** The pinned-or-adaptive range exchange shared by the prefix-sum
+    * family: explicit width when `numPartitions` > 0 (or AQE coalescing
+    * is off), otherwise planned WITHOUT a partition count so AQE's
     * partition coalescing sizes it from the actual shuffled bytes
     * (opt guide §2: scale-adaptive partitioning, never a constant) —
     * a key-grain frame of a few thousand rows collapses to one or two
@@ -57,18 +57,11 @@ object Packing {
     * are identical either way: prefix sums are independent of where
     * partition boundaries fall (AQE merges CONTIGUOUS range
     * partitions, so partition-index order still ascends with the
-    * range order, which is all phases 2/3 need). `false` restores the
-    * fixed shuffle-partitions width (the A/B instrument). */
-  val AdaptiveWidthKey = "spark.graft.prefixSum.adaptiveWidth"
-
-  /** The pinned-or-adaptive range exchange shared by the prefix-sum
-    * family: explicit width when `numPartitions` > 0 or the adaptive
-    * form is disabled, otherwise AQE-coalescible. */
+    * range order, which is all phases 2/3 need). */
   private[ops] def rangedBy(df: DataFrame, order: Seq[Column],
       numPartitions: Int): DataFrame = {
     val spark = df.sparkSession
     val adaptive = numPartitions <= 0 &&
-      spark.conf.getOption(AdaptiveWidthKey).forall(_.toBoolean) &&
       spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean &&
       spark.conf.get(
         "spark.sql.adaptive.coalescePartitions.enabled", "true").toBoolean
@@ -136,7 +129,7 @@ object Packing {
     // plan still reads the cache); checkpoint blocks are instead
     // reclaimed by the ContextCleaner once the returned frame is
     // dropped. Local vs reliable is the caller's durability choice —
-    // see [[ReliableCheckpointKey]]; width per [[AdaptiveWidthKey]].
+    // see [[ReliableCheckpointKey]]; width per [[rangedBy]].
     val ranged = rangedBy(normalized, order, numPartitions)
     // Phase 1+2: per-partition totals -> driver prefix sum. Range
     // partition indices ascend with the key range, so offset order is

@@ -497,7 +497,7 @@ object Similarity {
     * loop's form: it feeds the rows to the admission-fit guard and the
     * running-census fold without wrapping them in a local relation
     * only to collect them straight back out (one job per batch in the
-    * r16 JobProf rollup). The stats-table append still writes from the
+    * r16 per-job rollup, OPTIMIZATION_r16.md). The stats-table append still writes from the
     * local relation (source of truth unchanged). */
   private[graft] def appendToIvfIndexRows(
       spark: org.apache.spark.sql.SparkSession,
@@ -505,7 +505,8 @@ object Similarity {
       cents: DataFrame): Array[org.apache.spark.sql.Row] = {
     // the assignment is consumed twice (lists write + stats agg); the
     // eager pin evaluates the broadcast-join argmax ONCE per batch —
-    // both consumers then read executor-resident blocks (r16 JobProf:
+    // both consumers then read executor-resident blocks (r16 per-job
+    // rollup, OPTIMIZATION_r16.md:
     // the double evaluation was rebuilding the centroid broadcast and
     // re-running the argmax per consumer). Blocks freed before return.
     val assigned = assignToCentroids(newVecs, id, vec, cents)
@@ -549,7 +550,7 @@ object Similarity {
     * is IN-SAMPLE (the centroids were trained on the build corpus), so
     * even an append drawn from the same distribution shows a positive
     * generalization gap — 0.05–0.14 cosine on the random fixtures
-    * (IvfMaintProbe, tri-scale). The 0.20 default sits above that gap
+    * (IVF maintenance probe, tri-scale, BENCH_NOTES.md). The 0.20 default sits above that gap
     * (same-distribution appends never fire) while a genuinely misfit
     * batch (SimilaritySpec's negated-vector case: fit goes negative,
     * drop ≈ 0.6) fires unambiguously. Callers with real corpora should
@@ -633,7 +634,7 @@ object Similarity {
     * stat rows, already materialized by [[appendToIvfIndex]]) instead
     * of a growing stats scan plus partitioned-table read/write jobs —
     * measured 3× cheaper per batch than even the small-fixture
-    * recompute (tools/IvfCensusProbe), and O(touched + k sidecar I/O)
+    * recompute (IVF census probe, BENCH_NOTES.md), and O(touched + k sidecar I/O)
     * at any history length.
     * Every summary field is additive under append except max_list_n
     * (monotone — appends only grow lists, so new max = max(old,
@@ -642,7 +643,7 @@ object Similarity {
     * [[censusVerdict]], shared with the recompute path, so running ==
     * recomputed wherever the base totals agree — pinned per batch
     * (including across a retrain) in SimilaritySpec/StreamingSpec and
-    * re-asserted per batch by IvfCensusProbe. The sidecar is a derived
+    * re-asserted per batch by the IVF census probe. The sidecar is a derived
     * cache: `stats/` remains the source of truth, and a crash between
     * the two file writes is recovered by re-running
     * [[initIvfCensusRunning]]. */
@@ -800,7 +801,7 @@ object Similarity {
     *
     * ZERO-NORM QUARANTINE: vectors with ‖v‖ = 0 (the degenerate
     * upstream-model-bug batch the census's fit trigger exists to catch
-    * — IvfMaintProbe's `degen` regime) are EXPLICITLY moved to
+    * — the IVF maintenance probe's `degen` regime) are EXPLICITLY moved to
     * `quarantine/` instead of re-ingested: cosine similarity to a zero
     * vector is identically 0, so a cosine IVF can neither train on nor
     * meaningfully retrieve them — rebuilding them into a list would
@@ -814,7 +815,8 @@ object Similarity {
     * x2_ann_ivf_retrain gate pins both ways, along with census-fires →
     * retrain → census-clears on the degenerate regime. (What retrain
     * honestly does NOT clear: a genuinely CONCENTRATED distribution —
-    * IvfMaintProbe measures post-retrain skew ~5.6-5.8× on the
+    * the IVF maintenance probe (BENCH_NOTES.md) measured post-retrain
+    * skew ~5.6-5.8× on the
     * concentration regime, because k-means cannot split a cos≈1 mass;
     * that persistent advisory means "k under-provisioned for this
     * distribution", a capacity decision for the operator, not an
@@ -1314,8 +1316,8 @@ object Similarity {
     * #3): what gets quantized is v − centroid(cell(v)), NOT the raw
     * vector — the same m×kCodes budget spends its codes on LOCAL
     * detail once the coarse quantizer has explained the between-cell
-    * structure. The win is GEOMETRY-DEPENDENT and the AnnRecallProbe
-    * A/B measures it rather than assumes it: on corpora with real
+    * structure. The win is GEOMETRY-DEPENDENT and the ANN recall
+    * A/B (BENCH_NOTES.md) measures it rather than assumes it: on corpora with real
     * cluster structure the residual form wins (probe's `mild` fixture),
     * while on the iid-random fixture the coarse centroids sit near the
     * origin (‖c‖ ≪ ‖v‖, measured in the probe), residual ≈ raw, and

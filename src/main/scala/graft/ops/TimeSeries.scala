@@ -164,8 +164,8 @@ object TimeSeries {
     * loop. Replaces the Catalyst accumulate-into-array fold those ops
     * shipped with: `concat(acc.out, array(row))` COPIES the whole
     * accumulator per element — O(h²) per key, measured 13.6 s vs 0.4 s
-    * at ~3 k-event histories in the round-9 TS probe (tools/
-    * TsScaleProbe, history mode). Per-key memory is the key's own run
+    * at ~3 k-event histories in the round-9 TS probe (history mode,
+    * BENCH_NOTES.md). Per-key memory is the key's own run
     * (the same entity-bounded contract the fold had); a pathological
     * single key is one task — the documented skew bound of any
     * keyed-sequential computation. */

@@ -104,6 +104,10 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(strict.contains((1L, 4L)))
     assert(strict.subsetOf(base))
+    // the cutoff is a pinned value: negative cutoffs are rejected
+    intercept[IllegalArgumentException] {
+      Dedup.minHashNearDups(docs, "doc_id", "text", estPrefilter = -1.0)
+    }
   }
 
   test("X3 jaccard: exact dup = 1.0, near-dup in (0,1)") {

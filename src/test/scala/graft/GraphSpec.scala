@@ -73,6 +73,19 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     assert(run(nodes, edges, 0).values.toSet == Set(1000000L))
   }
 
+  test("iters=0 pins nothing: no RDD left persisted after the result is read") {
+    import spark.implicits._
+    val e = edges.toDF("s", "d")
+    val n = nodes.toDF("v")
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet
+    for ((name, pr) <- Seq("pagerank" -> graft.ops.Graph.pagerank _,
+        "pagerankKeyed" -> graft.ops.Graph.pagerankKeyed _)) {
+      val before = pinned
+      assert(pr(e, "s", "d", n, "v", 0).collect().length == nodes.size)
+      assert((pinned -- before).isEmpty, s"$name(iters = 0) left RDDs persisted")
+    }
+  }
+
   /** Driver-side triangle reference: brute force over canonical node
     * triples of the simple undirected graph. */
   private def refTriangles(nodes: Seq[Long],

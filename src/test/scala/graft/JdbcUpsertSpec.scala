@@ -118,6 +118,21 @@ class JdbcUpsertSpec extends AnyFunSuite with SparkTestBase {
     JdbcUpsert.mergeIntoParquet(spark, path, batch2, Seq("k"), Seq("ver"))
     assert(state() == Map(101L -> "new", 102L -> "b", 103L -> "c"))
   }
+
+  test("mergeIntoParquet: a stale non-empty <path>_old fails the merge, table keeps its rows") {
+    val path = Files.createTempDirectory("graft_merge_old").toString + "/table"
+    JdbcUpsert.mergeIntoParquet(spark, path,
+      Seq((1L, "a", 1L)).toDF("k", "v", "ver"), Seq("k"), Seq("ver"))
+    val stale = new java.io.File(path + "_old")
+    assert(stale.mkdir())
+    Files.write(new java.io.File(stale, "leftover").toPath, Array[Byte](1))
+    intercept[java.io.IOException] {
+      JdbcUpsert.mergeIntoParquet(spark, path,
+        Seq((2L, "b", 1L)).toDF("k", "v", "ver"), Seq("k"), Seq("ver"))
+    }
+    val rows = spark.read.parquet(path).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(rows == Map(1L -> "a"))
+  }
 }
 
 /** Serializable Derby connector factory: the returned lambda captures

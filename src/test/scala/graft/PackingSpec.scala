@@ -85,21 +85,20 @@ class PackingSpec extends AnyFunSuite with SparkTestBase {
     val df2 = s2.createDataFrame(df.collect().toSeq.asInstanceOf[Seq[org.apache.spark.sql.Row]].asJava, df.schema)
     val adaptive = graft.ops.Packing.assignShards(df2, "k", "w", 100L)
     // tiny input + AQE coalescing ⇒ far fewer range partitions than the
-    // session's 32 (the r16 scale-adaptive width; ConfAb measured the
-    // fixed form 1.3-2× slower across the prefix-sum family)
+    // session's 32 (the r16 scale-adaptive width; a same-session A/B
+    // measured the fixed form 1.3-2× slower across the prefix-sum
+    // family, OPTIMIZATION_r16.md)
     assert(adaptive.rdd.getNumPartitions < 32,
       s"adaptive width did not coalesce: ${adaptive.rdd.getNumPartitions} partitions")
     val got = adaptive.select("k", "cum_w", "shard").as[(Long, Long, Long)]
       .collect().sortBy(_._1).toSeq
-    s2.conf.set(graft.ops.Packing.AdaptiveWidthKey, "false")
-    val fixed = graft.ops.Packing.assignShards(df2, "k", "w", 100L)
+    val fixed = graft.ops.Packing.assignShards(df2, "k", "w", 100L, numPartitions = 32)
     assert(fixed.rdd.getNumPartitions == 32,
-      s"kill switch must restore the fixed 32-wide exchange, got ${fixed.rdd.getNumPartitions}")
+      s"a pinned numPartitions must keep the fixed 32-wide exchange, got ${fixed.rdd.getNumPartitions}")
     val exp = fixed.select("k", "cum_w", "shard").as[(Long, Long, Long)]
       .collect().sortBy(_._1).toSeq
     assert(got == exp, "adaptive width changed prefix-sum results")
     // groupwiseRank rides the same exchange helper
-    s2.conf.unset(graft.ops.Packing.AdaptiveWidthKey)
     val g = (1 to 300).map(i => (i.toLong, s"s${i % 3}")).toDF("id", "src")
     val g2 = s2.createDataFrame(g.collect().toSeq.asInstanceOf[Seq[org.apache.spark.sql.Row]].asJava, g.schema)
     val ranked = graft.ops.Mixing.groupwiseRank(g2, "src", Seq(col("id")))

@@ -63,4 +63,16 @@ class QueriesSmokeSpec extends AnyFunSuite with SparkTestBase {
   test("flagship entry returns rows (driver t1 smoke)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
+
+  test("multisetEq: input columns named like its helpers are compared, not overwritten") {
+    import spark.implicits._
+    // an overwritten `_s` turned equal frames into "different"
+    val xs = Seq((1L, 5L), (1L, 5L), (2L, 6L)).toDF("k", "_s")
+    assert(SparkEntry.multisetEq(xs, xs.orderBy($"k".desc)))
+    val x = Seq((1L, 5L, 7L), (1L, 5L, 7L), (2L, 6L, 8L)).toDF("k", "_s", "_d")
+    assert(SparkEntry.multisetEq(x, x.orderBy($"k".desc)))
+    assert(!SparkEntry.multisetEq(x, x.limit(2)))
+    assert(!SparkEntry.multisetEq(x, Seq((1L, 5L, 7L), (1L, 9L, 7L), (2L, 6L, 8L))
+      .toDF("k", "_s", "_d")))
+  }
 }

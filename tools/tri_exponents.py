@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Assemble per-query scaling exponents from a TriScaleBench log.
+"""Assemble per-query scaling exponents from a `Harness scale` log.
 
 Reads `[tri] <sf> <name> <sec> s (<rows> rows)` lines, computes the
 log-slope of wall time across the scale decades (exponent b in
@@ -8,7 +8,9 @@ markdown table sorted by exponent. Queries bounded by doc_id filters
 are expected near 0; linear scaling is 1.0; the interesting rows are
 >1.2 (super-linear -> root-cause or design note).
 
-Usage: tri_exponents.py /tmp/tri_r13.log
+Usage:
+  sbt 'runMain graft.tools.Harness scale <sf0.01 dir> top:60 <sf0.1 dir> <sf1.0 dir>' | tee tri.log
+  tri_exponents.py tri.log
 """
 import math
 import re
